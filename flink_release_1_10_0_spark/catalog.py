@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -27,11 +28,14 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     """Coerce an event-time column to ``TimestampType`` whatever the source
     surfaced it as.
 
-    The events parquet stores ``ts`` as INT64 TIMESTAMP(NANOS).  Depending
-    on Spark version/confs that arrives as either ``bigint`` (raw nanos,
-    legacy reader) or ``timestamp_ntz`` (Spark 4.x native nanos support,
-    truncated to micros).  ``withWatermark`` — the reference's event-time
-    semantics (``TimestampAssigner`` / watermark path,
+    Every checked-in ``events.parquet`` stores ``ts`` as INT64
+    ``TIMESTAMP(MICROS, isAdjustedToUTC=false)``, which Spark reads as
+    ``timestamp_ntz``.  The ``bigint`` branch still applies to a file
+    whose ``ts`` is ``TIMESTAMP(NANOS)``: with
+    ``spark.sql.legacy.parquet.nanosAsLong`` on (``load`` sets it for
+    ``events``), Spark reads that as raw nanos, truncated to micros here.
+    ``withWatermark`` — the reference's event-time semantics
+    (``TimestampAssigner`` / watermark path,
     ``flink-streaming-java/.../timestamps/``) — requires TIMESTAMP, and the
     session timezone is pinned to UTC so an NTZ wall-clock cast is the
     identity reinterpretation DuckDB uses for naive timestamps.
@@ -69,36 +73,51 @@ def register_tables(spark: SparkSession, sf_dir: str,
 # index and re-reads the parquet footer on EVERY call (measured 90-150ms
 # of pure driver gap per call; a bench run makes ~170 such calls).  The
 # memoized value is an analyzed scan PLAN, not data: every action against
-# it still reads the parquet inputs through the normal scan path.  Keyed
-# on the JVM session identity (the same convention as the planning-probe
-# memo in llm/text.py), so a new session never sees a stale entry.
+# it still reads the parquet inputs through the normal scan path.  It is
+# kept with the file's raw schema (before ``normalize_event_time``), which
+# a streaming scan of the same file needs.  Keyed on the JVM session
+# identity (the same convention as the planning-probe memo in
+# llm/text.py), so a new session never sees a stale entry.
 _LOAD_MEMO: dict = {}
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table as a DataFrame (no view registration).
-
-    ``events.parquet`` stores ``ts`` as parquet INT64 TIMESTAMP(NANOS),
-    which Spark's vectorized reader rejects; read it as raw nanos
-    (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to microsecond
-    timestamps — matching DuckDB's nanos->micros truncation.
-    """
+def _resolve(spark: SparkSession, sf_dir: str, name: str) -> tuple[DataFrame, StructType]:
+    """The memo entry of one table: (loaded DataFrame, raw file schema)."""
     key = None
     try:
         key = (id(spark._jsparkSession), os.path.realpath(sf_dir), name)
     except Exception:
         pass        # non-classic session shape: no memo
-    df = _LOAD_MEMO.get(key) if key is not None else None
-    if df is not None:
-        return df
+    entry = _LOAD_MEMO.get(key) if key is not None else None
+    if entry is not None:
+        return entry
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_event_time(spark.read.parquet(path))
-    else:
-        df = spark.read.parquet(path)
+    raw = spark.read.parquet(path)
+    entry = (normalize_event_time(raw) if name == "events" else raw, raw.schema)
     if key is not None:
         if len(_LOAD_MEMO) > 256:   # bound driver memory across sessions
             _LOAD_MEMO.clear()
-        _LOAD_MEMO[key] = df
-    return df
+        _LOAD_MEMO[key] = entry
+    return entry
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one table as a DataFrame (no view registration).
+
+    ``events.parquet`` stores ``ts`` as parquet INT64
+    ``TIMESTAMP(MICROS, isAdjustedToUTC=false)``, read as ``timestamp_ntz``
+    and cast to ``timestamp`` by ``normalize_event_time``.  The events read
+    sets ``spark.sql.legacy.parquet.nanosAsLong``, so that an events file
+    with ``TIMESTAMP(NANOS)`` ``ts``, which Spark's vectorized reader
+    rejects, reads as raw nanos and is truncated to microsecond timestamps
+    — matching DuckDB's nanos->micros truncation.
+    """
+    return _resolve(spark, sf_dir, name)[0]
+
+
+def file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The table file's schema as Spark reads it, before event-time
+    normalization; from the memo, so no schema-inference job runs again."""
+    return _resolve(spark, sf_dir, name)[1]

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,14 +27,19 @@ _counter = itertools.count()
 
 def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Streaming scan of a testdata table (StreamExecTableSourceScan
-    analog).  Handles the events table's INT64-nanos timestamp the same
-    way the batch catalog does."""
-    from ..catalog import normalize_event_time
+    analog).  Normalizes the events table's ``ts`` the same way the batch
+    catalog does: the checked-in files store it as INT64
+    ``TIMESTAMP(MICROS, isAdjustedToUTC=false)`` (read as ``timestamp_ntz``);
+    a ``TIMESTAMP(NANOS)`` file reads as raw-nanos ``bigint``.
+
+    The file schema comes from the catalog's per-session memo, so a
+    stream over a table already resolved runs no schema-inference job."""
+    from ..catalog import file_schema, normalize_event_time
 
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema = file_schema(spark, sf_dir, name)
     if os.path.isdir(path):
         # table stored as a directory of part files (e.g. the scale
         # sweep's synthesized tiers): stream the directory itself
@@ -51,16 +57,22 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def run_to_completion(result: DataFrame, output_mode: str = "append") -> DataFrame:
     """Execute a streaming DataFrame to completion into a memory sink;
-    returns the collected sink as a batch DataFrame."""
+    returns the collected sink as a batch DataFrame.
+
+    The checkpoint dir is private to the run and removed once the query
+    has terminated; the sink's rows live in driver memory."""
     spark = result.sparkSession
     qname = f"_stream_sink_{next(_counter)}"
     ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    q = (result.writeStream
-         .format("memory")
-         .queryName(qname)
-         .outputMode(output_mode)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    try:
+        q = (result.writeStream
+             .format("memory")
+             .queryName(qname)
+             .outputMode(output_mode)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(qname)

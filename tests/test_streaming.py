@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import compare_query
+from tests.conftest import SF_DIR, compare_query
 
 STREAMING = [
     "stream_tumble_agg",
@@ -447,3 +449,47 @@ def test_latency_tracker_captures_trigger_histogram(spark):
     assert h["count"] >= 1
     assert h["max_ms"] >= h["min_ms"] >= 0
     assert any(p["numInputRows"] > 0 for p in tracker.progress)
+
+
+def test_bounded_runs_leave_checkpoint_dirs_flat(spark, tmp_path, monkeypatch):
+    """Each bounded run's private checkpoint dir is removed once its query
+    has terminated, so N runs in one session leave the count flat."""
+    import glob
+    import tempfile
+
+    from flink_release_1_10_0_spark.streaming.core import (
+        read_stream_table, run_to_completion)
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    expect = sorted(tuple(r) for r in spark.read.parquet(
+        os.path.join(SF_DIR, "events.parquet")).groupBy("event_type").count().collect())
+    for _ in range(3):
+        ev = read_stream_table(spark, SF_DIR, "events")
+        out = run_to_completion(ev.groupBy("event_type").count(), output_mode="complete")
+        assert sorted(tuple(r) for r in out.collect()) == expect
+        assert glob.glob(str(tmp_path / "spark_graft_ckpt_*")) == []
+
+
+def test_stream_scan_reuses_the_catalog_schema(spark, tmp_path):
+    """``read_stream_table`` over a table the catalog has resolved runs no
+    schema-inference job."""
+    import shutil
+
+    from flink_release_1_10_0_spark.catalog import load
+    from flink_release_1_10_0_spark.streaming.core import read_stream_table
+
+    shutil.copy(os.path.join(SF_DIR, "events.parquet"), tmp_path / "events.parquet")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("catalog_load", "schema inference")
+        batch = load(spark, str(tmp_path), "events")
+        assert tracker.getJobIdsForGroup("catalog_load"), \
+            "a fresh table resolution should infer the schema with a job"
+        sc.setJobGroup("stream_scan", "no schema inference")
+        stream = read_stream_table(spark, str(tmp_path), "events")
+        assert tracker.getJobIdsForGroup("stream_scan") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stream.schema == batch.schema

@@ -26,36 +26,11 @@ UI_PORT = 4077
 
 
 def get_spark_with_ui():
-    from pyspark.sql import SparkSession
+    """``session.get_spark``'s session with the UI on."""
+    from flink_release_1_10_0_spark.session import get_spark
 
-    n = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # mirror flink_release_1_10_0_spark.session.get_spark, UI on
-    builder = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.default.parallelism", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # keep in sync with session.get_spark: small-byte CPU-heavy stages
-        # must not coalesce below useful parallelism here either, or the
-        # profiler measures a different plan than the bench runs
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.cbo.enabled", "true")
-        .config("spark.sql.cbo.joinReorder.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return get_spark("profile", overrides={"spark.ui.enabled": "true",
+                                           "spark.ui.port": str(UI_PORT)})
 
 
 def rest(app_id: str, path: str):

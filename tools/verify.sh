@@ -7,6 +7,7 @@ cd "$(dirname "$0")/.."
 
 echo "== pytest =="
 python -m pytest tests/ -q
+python -m pytest perfbench/tests -q
 
 echo "== oracle gate @ sf0.01 (the driver's scale) =="
 python tools/compare.py /root/testdata/sf0.01 2>/dev/null | tail -1
