@@ -117,6 +117,20 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _resolve(spark, sf_dir, name)[0]
 
 
+def table_source(spark: SparkSession, df: DataFrame) -> tuple[str, str] | None:
+    """``(sf_dir, name)`` when ``df`` is the very frame ``load`` returned
+    for this session (found in the memo by identity), else None — a
+    derived or foreign frame is never mistaken for its table."""
+    try:
+        sid = id(spark._jsparkSession)
+    except Exception:
+        return None
+    for (s, sf_dir, name), (loaded, _) in _LOAD_MEMO.items():
+        if s == sid and loaded is df:
+            return sf_dir, name
+    return None
+
+
 def file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     """The table file's schema as Spark reads it, before event-time
     normalization; from the memo, so no schema-inference job runs again."""

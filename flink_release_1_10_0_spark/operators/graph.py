@@ -60,6 +60,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
               .withColumn("component", F.col("id")))
     sym = sym.persist()
     labels = labels.persist()
+    frontier = None     # this round's input, once it is a local checkpoint
     for step in range(max_iterations):
         neighbor_min = (sym.join(labels, sym.b == labels.id)
                         .groupBy(F.col("a").alias("id"))
@@ -93,12 +94,25 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         new_labels = new_labels.localCheckpoint(eager=True)
         changed = (new_labels.filter(F.expr("component <> __old"))
                    .limit(1).count())
-        labels.unpersist()
+        # release the superseded frontier: the seed is a cached frame,
+        # every later one the checkpoint behind a projection
+        if frontier is None:
+            labels.unpersist()
+        else:
+            _release_checkpoint(frontier)
+        frontier = new_labels
         labels = new_labels.select("id", "component")
         if changed == 0:
             break
     sym.unpersist()
     return labels
+
+
+def _release_checkpoint(frame: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``-ed frame, which must not
+    be read again.  ``DataFrame.unpersist`` does not reach them: the
+    checkpoint is the persisted RDD under the frame's ``LogicalRDD``."""
+    frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

@@ -71,14 +71,12 @@ Documented narrowings (each raises, never silently degrades):
 
 from __future__ import annotations
 
-import itertools
 import re
+import shutil
 import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-
-_counter = itertools.count()
 
 _MR_HEAD = re.compile(
     r"FROM\s+([A-Za-z_][\w.]*)\s+MATCH_RECOGNIZE\s*\(", re.IGNORECASE)
@@ -468,39 +466,6 @@ def _compile_define(spec: MatchSpec) -> tuple[dict[str, str], dict]:
     return sql_define, nav
 
 
-def _bounded_stream(df: DataFrame, keys: list[str] | None = None,
-                    ts_col: str = "ts",
-                    id_col: str = "event_id") -> DataFrame:
-    """Replay a bounded table as a micro-stream (one ordered part file —
-    the NFA's event-time-ordered arrival contract).
-
-    When ``keys`` is given, one end-of-stream sentinel row per key is
-    appended (``nfa.with_eos_sentinels``) — the final +inf watermark of
-    a bounded reference job, which flushes pending runs so a satisfied
-    trailing-greedy match at the end of the replay emits instead of
-    being silently dropped (SQL:2016 batch semantics).
-
-    SCALE CONTRACT: this is the bounded VERIFY harness only — the
-    ``coalesce(1)`` funnels the whole input through one task to
-    guarantee globally ordered arrival, which is exactly right for
-    oracle replays and exactly wrong for large inputs.  Production
-    callers must pass ``stream_df`` to
-    :func:`execute_match_recognize_sql` (a real keyed stream — Kafka,
-    file-monitor, rate source); the NFA itself partitions by key and
-    scales, only this replay helper is single-task.  A user-supplied
-    ``stream_df`` gets NO sentinel (a continuous stream has no end):
-    tail matches still pending when such a replay ends follow the NFA's
-    unbounded contract (see ``streaming/nfa.py`` scope notes)."""
-    from flink_release_1_10_0_spark.streaming.nfa import with_eos_sentinels
-
-    spark = df.sparkSession
-    if keys:
-        df = with_eos_sentinels(df, keys, ts_col=ts_col, id_col=id_col)
-    src = tempfile.mkdtemp(prefix=f"sqlmatch_src_{next(_counter)}_")
-    df.coalesce(1).write.mode("append").parquet(src)
-    return spark.readStream.schema(df.schema).parquet(src)
-
-
 def execute_match_recognize_sql(spark: SparkSession, query: str,
                                 batch_df: DataFrame | None = None,
                                 stream_df: DataFrame | None = None,
@@ -509,11 +474,43 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
     result of the FULL statement (outer projection included).
 
     ``batch_df`` overrides the FROM-table resolution (otherwise
-    ``spark.table(name)``); ``stream_df`` overrides the micro-stream
-    replay (callers that already have a streaming frame)."""
+    ``spark.table(name)``); MEASURES and the anchor bounds read it.  The
+    NFA runs over a micro-stream, the replay source, chosen as follows:
+
+    - a caller's ``stream_df`` is used as given, with the NFA's
+      UNBOUNDED semantics: a continuous stream has no end, so tail
+      matches still pending when such a replay stops follow the
+      unbounded contract (see ``streaming/nfa.py`` scope notes), and
+      anchors (^/$) refuse;
+    - a FROM frame that ``catalog.load`` returned in this session is
+      streamed straight from its parquet file (``read_stream_table``):
+      no Spark job runs before the query starts;
+    - any other frame (a derived column, a filter, ``spark.table``) is
+      written once, in parallel, to a temp dir the call owns and removes
+      after the last alternation branch has run.
+
+    The last two are BOUNDED replays: the NFA sorts each key's rows of
+    the micro-batch by ``(ts, tiebreakers, id)`` and closes the key after
+    its last row (``match_nfa(end_of_input=True)``), the final +inf
+    watermark of a bounded reference job — a satisfied trailing-greedy
+    match at the end of the input emits instead of being dropped
+    (SQL:2016 batch semantics).  That close is exact only when the whole
+    input arrives in ONE micro-batch (``availableNow`` over files, no
+    ``maxFilesPerTrigger``), so a bounded run that took more raises.
+
+    SCALE CONTRACT: a bounded replay puts each key's whole input into
+    one Python call of the stateful operator — exactly right for oracle
+    replays and bounded tables whose keys fit a worker, wrong for an
+    unbounded feed.  Production callers pass ``stream_df`` (a real keyed
+    stream — Kafka, file-monitor, rate source); the NFA partitions by
+    key and scales."""
+    from pyspark.sql import functions as F
+
+    from flink_release_1_10_0_spark.catalog import table_source
     from flink_release_1_10_0_spark.streaming.cep import (
-        compile_match_pattern, match_recognize_measures)
-    from flink_release_1_10_0_spark.streaming.core import run_to_completion
+        _parse_after_match, compile_match_pattern, match_recognize_measures)
+    from flink_release_1_10_0_spark.streaming.core import (
+        read_stream_table, run_to_completion)
     from flink_release_1_10_0_spark.streaming.nfa import match_nfa
 
     spec = parse_match_recognize(query)
@@ -620,82 +617,8 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
                 spec.subsets[_mrt_vars] = list(spec.define)
             spec.measures[name] = f"MAX({_mrt_vars}.{spec.order_by[0]})"
     batch = batch_df if batch_df is not None else spark.table(spec.table)
-    if stream_df is not None:
-        stream = stream_df
-    else:
-        # project the replay write down to the columns the NFA can
-        # reference (guide §2.3 "project before the exchange", here
-        # before the coalesce(1) replay write): keys, order columns,
-        # the id, and any input column whose name appears in a DEFINE
-        # condition or ORDER BY expression (a word-match superset —
-        # never drops a referenced column; an unreferenced payload
-        # column like a document body never pays the write+stream
-        # round trip).  MEASURES read the BATCH side, not the stream.
-        needed = {*spec.partition_by, spec.order_by[0], id_col}
-        texts = list(spec.define.values()) + list(spec.order_by[1:])
-        for c in batch.columns:
-            if c not in needed and any(
-                    re.search(rf"\b{re.escape(c)}\b", t) for t in texts):
-                needed.add(c)
-        stream = _bounded_stream(
-            batch.select([c for c in batch.columns if c in needed]),
-            keys=spec.partition_by, ts_col=spec.order_by[0],
-            id_col=id_col)
     define, nav = _compile_define(spec)
     alternation = _expand_alternation(spec.pattern)
-    stages = (None if alternation
-              else compile_match_pattern(spec.pattern, define, nav=nav))
-
-    # expression tiebreakers (ORDER BY ts, value * -1, ...) become
-    # derived columns computed JVM-side before the keyed shuffle; plain
-    # column operands (with optional DESC) pass straight through
-    from pyspark.sql import functions as F
-    tiebreakers = []
-    for i, item in enumerate(spec.order_by[1:]):
-        dm = _ORDER_DIR.search(item)
-        operand = item[:dm.start()].strip() if dm else item
-        suffix = " DESC" if item.endswith(" DESC") else ""
-        if re.match(r"^[A-Za-z_]\w*$", operand):
-            tiebreakers.append(operand + suffix)
-        else:
-            name = f"__ob{i}"
-            stream = stream.withColumn(name, F.expr(operand))
-            tiebreakers.append(name + suffix)
-
-    from flink_release_1_10_0_spark.streaming.cep import _parse_after_match
-
-    def _run_one(branch_stages, measure_vars=None, drop_match_no=False):
-        log = run_to_completion(
-            match_nfa(stream, branch_stages,
-                      within_minutes=spec.within_minutes,
-                      key=spec.partition_by,
-                      after_match=_parse_after_match(spec.after_match),
-                      ts_col=spec.order_by[0], id_col=id_col,
-                      order_tiebreakers=tiebreakers), "append")
-        if anchor_start or anchor_end:
-            # anchor filter on the match LOG, before measures: the
-            # per-key partition bounds frame is tiny — broadcast it
-            ts0 = spec.order_by[0]
-            bounds = (batch.groupBy(*spec.partition_by).agg(
-                F.expr(f"min_by({id_col}, struct({ts0}, {id_col}))")
-                .alias("__first_id"),
-                F.expr(f"max_by({id_col}, struct({ts0}, {id_col}))")
-                .alias("__last_id")))
-            log = log.join(F.broadcast(bounds), spec.partition_by)
-            if anchor_start:
-                log = log.filter(F.col("start_id") == F.col("__first_id"))
-            if anchor_end:
-                log = log.filter(F.col("end_id") == F.col("__last_id"))
-            log = log.drop("__first_id", "__last_id")
-        o = match_recognize_measures(
-            # stage order comes from PATTERN, not the DEFINE clause — a
-            # user may list DEFINE conditions in any order
-            log, batch, stage_names=[s.name for s in branch_stages],
-            measures=spec.measures, partition_by=spec.partition_by,
-            rows_per_match=spec.rows_per_match, subsets=spec.subsets,
-            exclude=excluded, measure_vars=measure_vars)
-        return o.drop("match_no") if drop_match_no else o
-
     if alternation:
         # SQL:2016 alternation (EXCEEDS-reference, match_recognize.md:
         # 1108): UNION of the expanded branch patterns — exact iff the
@@ -773,20 +696,109 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
                     "be ambiguous — make the predicates mutually "
                     "exclusive")
         all_vars = list(spec.define)
-        parts = [_run_one(compile_match_pattern(bp, define, nav=nav),
-                          measure_vars=all_vars, drop_match_no=True)
-                 for bp in branch_patterns]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        branches = [(compile_match_pattern(bp, define, nav=nav), all_vars)
+                    for bp in branch_patterns]
     else:
-        out = _run_one(stages)
-        if spec.match_number_alias:
-            out = out.withColumnRenamed("match_no",
-                                        spec.match_number_alias)
-    view = f"_match_recognize_{next(_counter)}"
-    out.createOrReplaceTempView(view)
+        branches = [(compile_match_pattern(spec.pattern, define, nav=nav),
+                     None)]
+
+    # expression tiebreakers (ORDER BY ts, value * -1, ...) become
+    # derived columns computed JVM-side before the keyed shuffle; plain
+    # column operands (with optional DESC) pass straight through
+    tiebreakers, derived = [], []
+    for i, item in enumerate(spec.order_by[1:]):
+        dm = _ORDER_DIR.search(item)
+        operand = item[:dm.start()].strip() if dm else item
+        suffix = " DESC" if item.endswith(" DESC") else ""
+        if re.match(r"^[A-Za-z_]\w*$", operand):
+            tiebreakers.append(operand + suffix)
+        else:
+            name = f"__ob{i}"
+            derived.append((name, operand))
+            tiebreakers.append(name + suffix)
+
+    bounded = stream_df is None
+    replay_dir = None
+    if not bounded:
+        stream = stream_df
+    else:
+        # project the replay down to the columns the NFA can
+        # reference (guide §2.3 "project before the exchange", here
+        # before the replay scan or write): keys, order columns,
+        # the id, and any input column whose name appears in a DEFINE
+        # condition or ORDER BY expression (a word-match superset —
+        # never drops a referenced column; an unreferenced payload
+        # column like a document body never pays the write+stream
+        # round trip).  MEASURES read the BATCH side, not the stream.
+        needed = {*spec.partition_by, spec.order_by[0], id_col}
+        texts = list(spec.define.values()) + list(spec.order_by[1:])
+        for c in batch.columns:
+            if c not in needed and any(
+                    re.search(rf"\b{re.escape(c)}\b", t) for t in texts):
+                needed.add(c)
+        cols = [c for c in batch.columns if c in needed]
+        src = table_source(spark, batch)
+        if src is not None:
+            stream = read_stream_table(spark, *src).select(cols)
+        else:
+            replay_dir = tempfile.mkdtemp(prefix="sqlmatch_src_")
+            frame = batch.select(cols)
+            frame.write.mode("append").parquet(replay_dir)
+            stream = spark.readStream.schema(frame.schema).parquet(replay_dir)
+    for name, operand in derived:
+        stream = stream.withColumn(name, F.expr(operand))
+
+    def _run_one(branch_stages, measure_vars=None, drop_match_no=False):
+        log = run_to_completion(
+            match_nfa(stream, branch_stages,
+                      within_minutes=spec.within_minutes,
+                      key=spec.partition_by,
+                      after_match=_parse_after_match(spec.after_match),
+                      ts_col=spec.order_by[0], id_col=id_col,
+                      order_tiebreakers=tiebreakers,
+                      end_of_input=bounded),
+            "append", single_batch=bounded)
+        if anchor_start or anchor_end:
+            # anchor filter on the match LOG, before measures: the
+            # per-key partition bounds frame is tiny — broadcast it
+            ts0 = spec.order_by[0]
+            bounds = (batch.groupBy(*spec.partition_by).agg(
+                F.expr(f"min_by({id_col}, struct({ts0}, {id_col}))")
+                .alias("__first_id"),
+                F.expr(f"max_by({id_col}, struct({ts0}, {id_col}))")
+                .alias("__last_id")))
+            log = log.join(F.broadcast(bounds), spec.partition_by)
+            if anchor_start:
+                log = log.filter(F.col("start_id") == F.col("__first_id"))
+            if anchor_end:
+                log = log.filter(F.col("end_id") == F.col("__last_id"))
+            log = log.drop("__first_id", "__last_id")
+        o = match_recognize_measures(
+            # stage order comes from PATTERN, not the DEFINE clause — a
+            # user may list DEFINE conditions in any order
+            log, batch, stage_names=[s.name for s in branch_stages],
+            measures=spec.measures, partition_by=spec.partition_by,
+            rows_per_match=spec.rows_per_match, subsets=spec.subsets,
+            exclude=excluded, measure_vars=measure_vars)
+        return o.drop("match_no") if drop_match_no else o
+
+    try:
+        parts = [_run_one(branch_stages, measure_vars=mv,
+                          drop_match_no=bool(alternation))
+                 for branch_stages, mv in branches]
+    finally:
+        if replay_dir is not None:
+            shutil.rmtree(replay_dir, ignore_errors=True)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    if not alternation and spec.match_number_alias:
+        out = out.withColumnRenamed("match_no", spec.match_number_alias)
     # the outer remainder may itself use Flink group-window functions
-    # (TUMBLE/HOP/SESSION over the match output) — rewrite them too
+    # (TUMBLE/HOP/SESSION over the match output) — rewrite them too.
+    # The match output enters as a DataFrame argument, not a registered
+    # view; every other brace of the text is escaped for the formatter.
     from flink_release_1_10_0_spark.sql_windows import rewrite_group_windows
-    return spark.sql(rewrite_group_windows(spec.outer.replace("{VIEW}", view)))
+    outer = "{VIEW}".join(part.replace("{", "{{").replace("}", "}}")
+                          for part in spec.outer.split("{VIEW}"))
+    return spark.sql(rewrite_group_windows(outer), VIEW=out)

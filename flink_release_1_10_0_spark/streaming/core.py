@@ -55,12 +55,21 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return sdf
 
 
-def run_to_completion(result: DataFrame, output_mode: str = "append") -> DataFrame:
+def run_to_completion(result: DataFrame, output_mode: str = "append",
+                      single_batch: bool = False) -> DataFrame:
     """Execute a streaming DataFrame to completion into a memory sink;
     returns the collected sink as a batch DataFrame.
 
     The checkpoint dir is private to the run and removed once the query
-    has terminated; the sink's rows live in driver memory."""
+    has terminated.  The sink's temp view is dropped as soon as its
+    DataFrame is taken, so a run registers nothing in the catalog; the
+    sink's rows stay in driver memory exactly as long as the returned
+    DataFrame, or a frame derived from it, is referenced.
+
+    ``single_batch=True`` raises ``RuntimeError`` when the query took
+    more than one micro-batch with input rows — the contract of a
+    bounded replay whose end-of-input close (``match_nfa(...,
+    end_of_input=True)``) runs with the batch that carries the input."""
     spark = result.sparkSession
     qname = f"_stream_sink_{next(_counter)}"
     ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
@@ -75,4 +84,13 @@ def run_to_completion(result: DataFrame, output_mode: str = "append") -> DataFra
         q.awaitTermination()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname)
+    out = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    if single_batch:
+        data_batches = sum(1 for p in q.recentProgress if p["numInputRows"])
+        if data_batches > 1:
+            raise RuntimeError(
+                f"bounded replay took {data_batches} data micro-batches; "
+                "its end-of-input close needs the whole input in one "
+                "(availableNow over files, no maxFilesPerTrigger)")
+    return out

@@ -75,8 +75,8 @@ oneOrMore):
   *closes* — on an ``until`` event, bounded saturation, a strict-inner
   violation, the within-window expiring on the run (the window closing
   IS a closing condition: nothing can extend the run anymore, so the
-  consumed maximum emits as a NORMAL match, not a timeout), or an
-  end-of-stream sentinel (bounded replays; see ``with_eos_sentinels``).
+  consumed maximum emits as a NORMAL match, not a timeout), or the
+  end-of-input close (bounded replays; see ``match_nfa(end_of_input=)``).
   This is the SQL-quantifier tier (``PATTERN (A B+)`` compiles greedy):
   SQL:2016 greedy quantifiers produce the single maximal match.
 - a trailing NON-greedy ``optional`` emits both the short and the long
@@ -102,6 +102,24 @@ exact inner quantifiers (no negation/until/navigation/greedy/
 followedByAny inside); optional groups need relaxed seams.
 
 Scope notes (documented narrowings vs the reference):
+- events are processed per key in ``(ts, *order_tiebreakers, id)``
+  order WITHIN one micro-batch: the state function joins all of a key's
+  Arrow chunks of the batch and sorts them once.  Across micro-batches
+  the order is arrival order — an event arriving in a later batch with
+  an earlier timestamp than one already processed is not re-ordered
+  (the reference buffers until the watermark passes; a replay that
+  needs exact order must deliver each key's events in one batch).
+- end of input: with ``match_nfa(..., end_of_input=True)`` the caller
+  states that the micro-batch holding a key's rows is its last.  After
+  the key's last row the NFA closes it like the final +inf watermark of
+  a bounded reference job — satisfied trailing-greedy runs emit as
+  NORMAL matches, other partials time out (``emit_timeouts``) or are
+  dropped, held skip-strategy matches drain as far as no unsatisfied
+  partial blocks them — and removes the key's state instead of storing
+  it.  The close is exact only when the whole input arrives in ONE
+  micro-batch (``availableNow`` over files without
+  ``maxFilesPerTrigger``); ``run_to_completion(..., single_batch=True)``
+  raises when a run took more.
 - a trailing ``notFollowedBy`` is supported only via the dedicated
   watermark-timer operator (``stateful.cep_not_followed_by``) that the
   ``Pattern`` facade routes to; the generic engine supports negation
@@ -116,14 +134,14 @@ Scope notes (documented narrowings vs the reference):
   closing condition; the non-greedy forms above are the
   reference-faithful alternative.
 - window expiry has two drivers: same-key event-time advance (always
-  on; plus the EOS sentinel for bounded replays), and — with
+  on; plus the end-of-input close for bounded replays), and — with
   ``match_nfa(..., watermark_timers=...)`` — real cross-key event-time
   timers (``GroupStateTimeout.EventTimeTimeout``), so a key that goes
   silent forever still flushes its satisfied trailing-greedy maximal
   match when the GLOBAL watermark passes its window, the reference's
   ``CepOperator.java:82`` onEventTime semantics.  Timers require a
-  ``within`` window and a streaming source; bounded replays keep the
-  sentinel (batch has no watermark clock).
+  ``within`` window and a streaming source; bounded replays use the
+  end-of-input close (batch has no watermark clock).
 - at end-of-stream, a HELD skip-strategy match still blocked by an
   older UNSATISFIED partial run is discarded, exactly like the
   reference's bounded-job close (the completedMatches queue is never
@@ -156,17 +174,6 @@ MAX_RUNS_PER_KEY = 512
 # whose schema doesn't match — an explicit version makes that an
 # announced format break, not a surprise.
 NFA_STATE_FORMAT_VERSION = 4
-
-# End-of-stream sentinel id for BOUNDED replays: a row whose id equals
-# this value (appended by ``with_eos_sentinels``, sorted last per key by
-# its timestamp) flushes the key's pending runs — the analog of the
-# final +inf watermark a bounded reference job emits.  Satisfied
-# trailing-greedy runs emit as NORMAL matches (their maximal consumed
-# prefix is decided: nothing follows); other partials go to the timeout
-# output when ``emit_timeouts`` is on, else are dropped.  The sentinel
-# row itself never matches a stage, never starts a run, and never
-# appears in any output.
-EOS_SENTINEL_ID = -(2 ** 62)
 
 NO_SKIP = "no_skip"                    # AfterMatchSkipStrategy.noSkip (default)
 SKIP_TO_NEXT = "skip_to_next"          # AfterMatchSkipStrategy.skipToNext
@@ -422,7 +429,8 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
               ts_col: str = "ts", id_col: str = "event_id",
               order_tiebreakers: list[str] | None = None,
               emit_timeouts: bool = False,
-              watermark_timers: str | None = None) -> DataFrame:
+              watermark_timers: str | None = None,
+              end_of_input: bool = False) -> DataFrame:
     """Run the NFA over a keyed event stream.
 
     Returns an append stream: one row per completed match with the
@@ -467,8 +475,14 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
     ``within_minutes`` (only a window makes a silent run decidable) and
     a streaming source; ``withWatermark(ts_col, watermark_timers)`` is
     applied here.  Without it, expiry is driven by same-key event-time
-    advance only (plus the EOS sentinel on bounded replays) — the
-    right mode for batch replays, where there is no cross-key clock.
+    advance only (plus the end-of-input close on bounded replays) —
+    the right mode for batch replays, where there is no cross-key clock.
+
+    ``end_of_input=True`` says the micro-batch carrying a key's rows is
+    the last one: after the key's last row its pending runs are closed
+    (see the module's scope notes) and its state row is removed.  The
+    caller must deliver the whole input in one micro-batch and check it
+    (``run_to_completion(..., single_batch=True)``).
 
     ``after_match`` is ``no_skip``, ``skip_to_next``,
     ``skip_past_last``, or a tuple
@@ -948,9 +962,14 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                 else:
                     live.append(run)
             runs = resolve(live)
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
+        # one event-time sort per key per micro-batch: Spark hands a
+        # key's rows over in arrival order, split into Arrow chunks of
+        # ``arrow.maxRecordsPerBatch`` rows, so sorting chunk by chunk
+        # would let a later chunk's earlier events cross the seam
+        chunks = [c for c in pdfs if len(c)]
+        if chunks:
+            pdf = (chunks[0] if len(chunks) == 1
+                   else pd.concat(chunks, ignore_index=True))
             sort_cols = [ts_col, *[c for c in tiebreak
                                    if c not in (ts_col, id_col)], id_col]
             asc = [c not in tb_desc for c in sort_cols]
@@ -1007,45 +1026,6 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                 rowdicts = None
             for r_i in range(len(ids)):
                 eid, ts_us = ids[r_i], tss[r_i]
-                if eid == EOS_SENTINEL_ID:
-                    # end-of-stream flush (bounded replays; the final
-                    # +inf watermark of a bounded reference job): a
-                    # satisfied trailing-greedy run's maximal match is
-                    # decided — emit it; every other partial times out
-                    # (or is dropped without the timeout output)
-                    blockers = []
-                    for run in runs:
-                        if after_match != NO_SKIP \
-                                and (run[A], run[EV][0]) <= cut:
-                            continue
-                        s_f = run[S]
-                        if (spec[s_f][GREEDY] and run[T] >= spec[s_f][MIN]
-                                and tail_opt[s_f] and run[G] < 0):
-                            emit(run[A], run[L], run[EV], run[ST], run[EU])
-                        else:
-                            if emit_timeouts:
-                                timeouts.append((run[A], run[L], run[EV],
-                                                 run[ST]))
-                            # an UNSATISFIED partial: it never completes,
-                            # but it still blocks younger held matches —
-                            # the reference's bounded-job close leaves
-                            # completedMatches queued behind a live
-                            # partial unemitted, so those are DISCARDED
-                            # here, not flushed (full SQL:2016 batch
-                            # backtracking would instead re-bind the
-                            # blocked run's tail rows — a documented
-                            # divergence both engines share).  With a
-                            # within-window, the final +inf watermark
-                            # EXPIRES every windowed partial before the
-                            # queue drains (reference advanceTime), so
-                            # a windowed partial never blocks at EOS —
-                            # the held match emits.
-                            if within_us is None:
-                                blockers.append(run)
-                    runs = []
-                    resolve(blockers)
-                    pending.clear()
-                    continue
                 m = mrows[r_i]
                 rowvals = rowdicts[r_i] if rowdicts is not None else None
                 new_runs: list[list] = []
@@ -1459,6 +1439,41 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                     pending.sort(key=lambda p: (p[0], p[2][0]))
                     del pending[MAX_RUNS_PER_KEY:]
 
+        if end_of_input:
+            # end-of-input close after the key's last row (the final
+            # +inf watermark of a bounded reference job): a satisfied
+            # trailing-greedy run's maximal match is decided — emit it;
+            # every other partial times out (or is dropped without the
+            # timeout output)
+            blockers = []
+            for run in runs:
+                if after_match != NO_SKIP and (run[A], run[EV][0]) <= cut:
+                    continue
+                s_f = run[S]
+                if (spec[s_f][GREEDY] and run[T] >= spec[s_f][MIN]
+                        and tail_opt[s_f] and run[G] < 0):
+                    emit(run[A], run[L], run[EV], run[ST], run[EU])
+                else:
+                    if emit_timeouts:
+                        timeouts.append((run[A], run[L], run[EV], run[ST]))
+                    # an UNSATISFIED partial: it never completes, but it
+                    # still blocks younger held matches — the reference's
+                    # bounded-job close leaves completedMatches queued
+                    # behind a live partial unemitted, so those are
+                    # DISCARDED here, not flushed (full SQL:2016 batch
+                    # backtracking would instead re-bind the blocked
+                    # run's tail rows — a documented divergence both
+                    # engines share).  With a within-window, the final
+                    # +inf watermark EXPIRES every windowed partial before
+                    # the queue drains (reference advanceTime), so a
+                    # windowed partial never blocks at the close — the
+                    # held match emits.
+                    if within_us is None:
+                        blockers.append(run)
+            resolve(blockers)
+            # nothing of the key outlives its input: the state row goes
+            runs, pending, prev_rows, cut = [], [], [], (-1, -1)
+
         if not runs and not pending and not prev_rows and cut == (-1, -1):
             # nothing to persist: drop the state row entirely instead of
             # storing empty arrays.  Matters most in timer mode: a key
@@ -1566,31 +1581,3 @@ def _profile_wrap(fn, out_dir: str):
         yield from out
     return wrapped
 
-
-def with_eos_sentinels(df: DataFrame, key: str | list[str],
-                       ts_col: str = "ts",
-                       id_col: str = "event_id") -> DataFrame:
-    """Append one end-of-stream sentinel row per key to a BOUNDED batch
-    frame before replaying it through :func:`match_nfa` — the analog of
-    the final +inf watermark a bounded reference job emits, which is
-    what flushes pending runs (satisfied trailing-greedy matches emit,
-    other partials time out; see ``EOS_SENTINEL_ID``).
-
-    The sentinel carries ``id = EOS_SENTINEL_ID``, ``ts = max(ts) + 1
-    day`` for its key (so it sorts strictly last), and NULL in every
-    other column; the NFA recognizes it by id and never lets it match,
-    start a run, or reach any output.  Bounded replays only — a
-    continuous stream has no end to mark."""
-    keys = [key] if isinstance(key, str) else list(key)
-    sent = (df.groupBy(*keys)
-            .agg((F.max(ts_col) + F.expr("INTERVAL 1 DAY")).alias(ts_col)))
-    cols = []
-    for f_ in df.schema.fields:
-        if f_.name in keys or f_.name == ts_col:
-            cols.append(F.col(f_.name))
-        elif f_.name == id_col:
-            cols.append(F.lit(EOS_SENTINEL_ID).cast(f_.dataType)
-                        .alias(f_.name))
-        else:
-            cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-    return df.unionByName(sent.select(*cols))

@@ -25,10 +25,10 @@ def _events(spark, rows):
 
 
 def _run(spark, df, sql):
-    # batch path: execute_match_recognize_sql replays through
-    # _bounded_stream, which appends the per-key EOS sentinel (the
-    # bounded job's final watermark) — held skip-strategy matches and
-    # trailing-greedy runs flush at end-of-stream
+    # batch path: execute_match_recognize_sql replays the frame as one
+    # micro-batch and closes each key at end of input (the bounded job's
+    # final watermark) — held skip-strategy matches and trailing-greedy
+    # runs flush there
     from flink_release_1_10_0_spark.sql_match import (
         execute_match_recognize_sql)
     return execute_match_recognize_sql(spark, sql, batch_df=df)
@@ -174,10 +174,10 @@ def test_held_match_discarded_by_older_match(spark):
 def test_aggregate_state_survives_microbatches(spark):
     """The per-run (count, sum, min, max) accumulator round-trips
     through the state store: an A+ run split across two micro-batches
-    keeps its running average."""
+    keeps its running average.  A caller's stream has no end-of-input
+    close; B closes the match, so none is needed."""
     from flink_release_1_10_0_spark.sql_match import (
         execute_match_recognize_sql)
-    from flink_release_1_10_0_spark.streaming.nfa import with_eos_sentinels
 
     rows1 = [(1, "2024-01-01 10:00:00", 1, "t", 12.0),
              (2, "2024-01-01 10:00:01", 1, "t", 17.0)]
@@ -188,8 +188,7 @@ def test_aggregate_state_survives_microbatches(spark):
     batch = df1.unionByName(df2)
     src = tempfile.mkdtemp(prefix="mragg_batch_")
     df1.coalesce(1).write.mode("append").parquet(src)
-    with_eos_sentinels(df2, "user_id").coalesce(1).write.mode(
-        "append").parquet(src)
+    df2.coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(df1.schema).option(
         "maxFilesPerTrigger", 1).parquet(src)
     out = execute_match_recognize_sql(spark, """

@@ -695,42 +695,91 @@ def test_trailing_greedy_needs_closing_condition(spark):
         match_nfa(_stream(spark, [_ev(1, 0, "a")]), stages)
 
 
-def test_eos_sentinel_flushes_trailing_greedy(spark):
+def test_end_of_input_flushes_trailing_greedy(spark, tmp_path):
     """A satisfied trailing-greedy run still pending when a bounded
-    replay ends emits via the end-of-stream sentinel (the bounded job's
-    final +inf watermark) — previously silently dropped.  Partials flush
-    to the timeout output when emit_timeouts is on."""
-    from flink_release_1_10_0_spark.streaming.nfa import with_eos_sentinels
-
+    replay ends emits via the end-of-input close (the bounded job's
+    final +inf watermark) instead of being silently dropped, and the
+    key's state row is removed.  Partials flush to the timeout output
+    when emit_timeouts is on."""
     rows = [_ev(1, 0, "a"), _ev(2, 1, "b"), _ev(3, 2, "b")]
-    df = (spark.createDataFrame(rows, _SCHEMA)
-          .withColumn("ts", F.col("ts").cast("timestamp")))
-    sent = with_eos_sentinels(df, "user_id")
-    src = tempfile.mkdtemp(prefix="nfa_eos_")
-    sent.coalesce(1).write.mode("append").parquet(src)
-    sdf = spark.readStream.schema(sent.schema).parquet(src)
     stages = [NfaStage(pred="event_type = 'a'"),
               NfaStage(pred="event_type = 'b'", min_times=1, max_times=3,
                        greedy=True)]
-    out = run_to_completion(match_nfa(sdf, stages, within_minutes=600),
-                            "append")
-    assert sorted(tuple(r.ev_ids) for r in out.collect()) == [(1, 2, 3)]
+    # without the close the run waits for a closing event forever
+    assert _matches(spark, rows, stages, within_minutes=600) == []
+    q = (match_nfa(_stream(spark, rows), stages, within_minutes=600,
+                   end_of_input=True)
+         .writeStream.format("memory").queryName("nfa_end_of_input")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    try:
+        got = sorted(tuple(r.ev_ids)
+                     for r in spark.table("nfa_end_of_input").collect())
+        data = [p for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        spark.catalog.dropTempView("nfa_end_of_input")
+    assert got == [(1, 2, 3)]
+    assert len(data) == 1
+    assert data[0]["stateOperators"][0]["numRowsTotal"] == 0
 
     # partial (unsatisfied) runs flush to the timeout side output
     rows2 = [_ev(1, 0, "a"), _ev(2, 1, "b")]
-    df2 = (spark.createDataFrame(rows2, _SCHEMA)
-           .withColumn("ts", F.col("ts").cast("timestamp")))
-    src2 = tempfile.mkdtemp(prefix="nfa_eos2_")
-    with_eos_sentinels(df2, "user_id").coalesce(1) \
-        .write.mode("append").parquet(src2)
-    sdf2 = spark.readStream.schema(df2.schema).parquet(src2)
     stages2 = [NfaStage(pred="event_type = 'a'"),
                NfaStage(pred="event_type = 'b'", min_times=3, max_times=3)]
     out2 = run_to_completion(
-        match_nfa(sdf2, stages2, within_minutes=60, emit_timeouts=True),
-        "append")
+        match_nfa(_stream(spark, rows2), stages2, within_minutes=60,
+                  emit_timeouts=True, end_of_input=True),
+        "append", single_batch=True)
     got2 = sorted((tuple(r.ev_ids), r.timed_out) for r in out2.collect())
     assert got2 == [((1, 2), True)]
+
+
+def test_bounded_replay_over_two_batches_raises(spark):
+    """The end-of-input close is exact only when the whole input arrives
+    in one micro-batch: a bounded run that took two raises."""
+    df = (spark.createDataFrame([_ev(1, 0, "a"), _ev(2, 1, "b")], _SCHEMA)
+          .withColumn("ts", F.col("ts").cast("timestamp")))
+    src = tempfile.mkdtemp(prefix="nfa_two_batches_")
+    df.limit(1).coalesce(1).write.mode("append").parquet(src)
+    df.filter("event_id = 2").coalesce(1).write.mode("append").parquet(src)
+    sdf = (spark.readStream.schema(df.schema)
+           .option("maxFilesPerTrigger", 1).parquet(src))
+    stages = [NfaStage(pred="event_type = 'a'"),
+              NfaStage(pred="event_type = 'b'")]
+    with pytest.raises(RuntimeError, match="2 data micro-batches"):
+        run_to_completion(match_nfa(sdf, stages, end_of_input=True),
+                          "append", single_batch=True)
+
+
+def test_key_rows_across_arrow_chunks_keep_event_time_order(spark):
+    """A key's rows reach the state function as several Arrow chunks
+    when they outnumber ``arrow.maxRecordsPerBatch``; the NFA must order
+    the key's whole micro-batch, not each chunk.  Rows arrive shuffled,
+    so per-chunk sorting would pair events across chunk seams out of
+    order."""
+    import random
+
+    rng = random.Random(7)
+    rows = [(i, f"2024-01-01 {10 + i // 60:02d}:{i % 60:02d}:00", 1 + i % 2,
+             rng.choice("abc"), 0.0) for i in range(240)]
+    rng.shuffle(rows)
+    stages = [NfaStage(pred="event_type = 'a'"),
+              NfaStage(pred="event_type = 'b'", contiguity="strict"),
+              NfaStage(pred="event_type = 'c'", contiguity="strict")]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    expect = _matches(spark, rows, stages)
+    assert expect        # the pattern occurs in this input
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "16")
+    try:
+        assert _matches(spark, rows, stages) == expect
+    finally:
+        spark.conf.set(conf, old)
+    by_id = {r[0]: r[3] for r in rows}
+    for m in expect:     # consecutive ids of one user, in time order
+        assert [by_id[e] for e in m] == ["a", "b", "c"]
+        assert list(m) == list(range(m[0], m[0] + 6, 2))
 
 
 def test_group_pattern_rejects_sub_within(spark):

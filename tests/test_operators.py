@@ -265,6 +265,25 @@ def test_connected_components_long_chain(spark):
     assert {r.component for r in rows} == {0}
 
 
+def test_connected_components_releases_superseded_frontiers(spark):
+    """Each round's local checkpoint supersedes the last one, which is
+    released: after several rounds the storage listing holds only the
+    live frontier the result reads (``sym`` is released on return)."""
+    from flink_release_1_10_0_spark.operators.graph import connected_components
+
+    def held():
+        return {i.id() for i in
+                spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src bigint, dst bigint")
+    for rounds in (3, 15):      # stopped early, and converged (~6 rounds)
+        before = held()
+        out = connected_components(chain, max_iterations=rounds)
+        assert len(held() - before) == 1
+        assert out.count() == 41
+
+
 def test_sssp_long_chain(spark):
     """BFS distance down a 12-hop path — one superstep per hop (inherent
     for BFS), lineage checkpointed every 8 hops."""

@@ -493,3 +493,73 @@ def test_stream_scan_reuses_the_catalog_schema(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert stream.schema == batch.schema
+
+
+def test_streaming_heads_leave_tmp_catalog_and_queries_flat(spark, tmp_path,
+                                                            monkeypatch):
+    """One session runs the bounded streaming heads again and again: the
+    temp dir, the catalog and the active streaming queries stay flat
+    (no replay dir, no memory-sink view, no MATCH_RECOGNIZE view left)."""
+    import tempfile
+
+    from flink_release_1_10_0_spark.queries import all_queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    qs = all_queries()
+    heads = ["stream_topn_per_key", "stream_cep_error_then_purchase",
+             "flink_sql_mr_define_agg_avg",
+             # a derived FROM frame: replayed through a temp dir
+             "flink_sql_mr_order_desc_tiebreaker"]
+
+    def snapshot():
+        return (sorted(os.listdir(tmp_path)),
+                sorted(t.name for t in spark.catalog.listTables()),
+                len(spark.streams.active))
+
+    start = snapshot()
+    for _ in range(3):
+        for head in heads:
+            assert qs[head](spark, SF_DIR).collect()
+        assert snapshot() == start
+
+
+def test_match_recognize_over_a_table_runs_no_job_before_its_query(
+        spark, monkeypatch):
+    """A MATCH_RECOGNIZE over a table ``catalog.load`` returned streams
+    the table's file: no Spark job runs before the streaming query.  The
+    match output reaches the outer SQL as a DataFrame argument, and a
+    brace elsewhere in the outer text reaches Spark verbatim."""
+    import flink_release_1_10_0_spark.streaming.core as core
+    from flink_release_1_10_0_spark.catalog import load
+    from flink_release_1_10_0_spark.sql_match import (
+        execute_match_recognize_sql)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs_at_start = []
+    real = core.run_to_completion
+
+    def spy(result, *args, **kwargs):
+        jobs_at_start.append(list(tracker.getJobIdsForGroup("mr_replay")))
+        return real(result, *args, **kwargs)
+
+    monkeypatch.setattr(core, "run_to_completion", spy)
+    events = load(spark, SF_DIR, "events")
+    try:
+        sc.setJobGroup("mr_replay", "bounded MATCH_RECOGNIZE replay")
+        out = execute_match_recognize_sql(spark, """
+            SELECT user_id, start_id, '{x}' AS tag
+            FROM events MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts
+              MEASURES FIRST(A.event_id) AS start_id
+              ONE ROW PER MATCH
+              AFTER MATCH SKIP TO NEXT ROW
+              PATTERN (A B)
+              DEFINE A AS event_type = 'click', B AS event_type = 'view'
+            ) AS m""", batch_df=events)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs_at_start == [[]]
+    assert {r.tag for r in out.collect()} == {"{x}"}

@@ -2,11 +2,15 @@
 on Spark and its oracle_sql() on DuckDB over the same parquet tables,
 compare row count + column names + order-insensitive values.
 
-Usage: python tools/compare.py [sf_dir] [query_name ...]
+Usage: python tools/compare.py [sf_dir] [query_name_or_pattern ...]
+
+A name may be a shell-style pattern (``fnmatch``): ``'cep_*'`` selects
+every query whose name starts with ``cep_``.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import os
 import sys
@@ -81,7 +85,7 @@ def rows_key(cols, rows):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
     spark = get_spark()
     qs, oracles = all_queries(), all_oracles()
     con = duckdb.connect()
@@ -92,7 +96,7 @@ def main():
 
     n_pass = n_fail = n_rowsonly = 0
     for name, fn in sorted(qs.items()):
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, p) for p in only):
             continue
         try:
             sdf = fn(spark, sf_dir)
